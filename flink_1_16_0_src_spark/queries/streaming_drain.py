@@ -1227,12 +1227,14 @@ def stream_doc_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest dedup of the DOCUMENTS corpus: file stream →
     token-bag fingerprint (pure codegen'd expression) → keep-FIRST
     stateful dedup keyed on the fingerprint (order_col=doc_id —
-    DeduplicateKeepFirstRowFunction parity via
-    stateful.keep_first_dedup). This is the training-pipeline shape: a
-    continuously-arriving crawl deduped online before it ever lands,
-    instead of a batch pass afterwards. The fixture's bag fingerprint
-    collides for token-shuffled near-dups (~10% of docs), so the
-    operator binds. State is one row per distinct fingerprint —
+    RowTimeDeduplicateFunction parity via stateful.keep_first_dedup,
+    which runs on Spark's JVM state operators: a min_by aggregate
+    then dropDuplicates, no Python worker). This is the
+    training-pipeline shape: a continuously-arriving crawl deduped
+    online before it ever lands, instead of a batch pass afterwards.
+    The fixture's bag fingerprint collides for token-shuffled
+    near-dups (~10% of docs), so the operator binds. State is one row
+    per distinct fingerprint, plus one per superseded first row —
     bounded by corpus cardinality exactly like the batch exact-dedup,
     and the keep-first rule makes emission deterministic under any
     arrival interleaving (min doc_id wins)."""

@@ -1979,24 +1979,14 @@ class TableEnvironment:
         reader = self.spark.readStream.schema(schema)
         for k, v in (options or {}).items():
             reader = reader.option(k, v)
+        from flink_1_16_0_src_spark.streaming.sources import (
+            note_source_bytes,
+            single_file_stream_dir,
+        )
+
         path = props["path"]
         if os.path.isfile(path):
-            # the file-stream source monitors a DIRECTORY; expose a
-            # single-file table through a symlink dir (same trick as
-            # streaming.sources.stream_table, no data copy)
-            import tempfile as _tf
-
-            link_dir = os.path.join(
-                _tf.gettempdir(), "spark_graft_streams",
-                f"ddl_{abs(hash(path))}_{name}",
-            )
-            os.makedirs(link_dir, exist_ok=True)
-            link = os.path.join(link_dir, os.path.basename(path))
-            if not os.path.exists(link):
-                os.symlink(path, link)
-            path = link_dir
-        from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
-
+            path = single_file_stream_dir(path, f"ddl_{name}")
         note_source_bytes(path)
         sdf = getattr(reader, props.get("format", "parquet"))(path)
         if name in self._watermarks:

@@ -1,11 +1,18 @@
 """Streaming deduplication.
 
-Reference parity (SURVEY.md §2.6):
-- StreamExecDeduplicate.java:85 keep-FIRST-row per key →
-  ``dropDuplicates`` (state kept forever) or
-  ``dropDuplicatesWithinWatermark`` (state freed by watermark — the
-  production form at 100 TB/day: state is bounded by the watermark
-  horizon, exactly like Flink's dedup state TTL).
+Reference parity (SURVEY.md §2.6). Every keep-FIRST form lives here and
+runs on Spark's JVM state operators — no Python keyed state:
+- StreamExecDeduplicate.java:85 keep-first per key, proctime
+  (DeduplicateKeepFirstRowFunction) → ``dropDuplicates`` (state kept
+  forever): :func:`dedup_keep_first` with ``within_watermark=False``.
+- the same with state freed by the watermark →
+  ``dropDuplicatesWithinWatermark`` (the production form at
+  100 TB/day: state is bounded by the watermark horizon, like Flink's
+  dedup state TTL): :func:`dedup_keep_first`.
+- keep-first per key, rowtime (RowTimeDeduplicateFunction: the
+  minimum-order row wins and a later, smaller order supersedes it) →
+  a ``min_by`` streaming aggregate plus ``dropDuplicates`` on
+  (keys, order): :func:`keep_first_dedup`.
 - keep-LAST-row per key emits updates on every arrival → stateful.py
   (keep_last_dedup) since it needs update semantics.
 - window dedup (StreamExecWindowDeduplicate.java:69) → dedupe on
@@ -25,6 +32,40 @@ def dedup_keep_first(sdf: DataFrame, keys: list[str], within_watermark: bool = T
     if within_watermark:
         return sdf.dropDuplicatesWithinWatermark(keys)
     return sdf.dropDuplicates(keys)
+
+
+def keep_first_dedup(
+    sdf: DataFrame, keys: list[str], order_col: str | None = None
+) -> DataFrame:
+    """First row per key wins (DeduplicateKeepFirstRowFunction /
+    RowTimeDeduplicateFunction parity). Output: the keys, then every
+    other column in input order. Run in update output mode.
+
+    ``order_col=None`` is proctime arrival order: once a key has state,
+    later rows emit nothing. With ``order_col`` the minimum-order row
+    wins; a later batch whose minimum is strictly smaller supersedes it
+    and re-emits, while a larger or repeated minimum emits nothing. A
+    NULL order loses to any non-NULL one (a key whose rows all have a
+    NULL order still keeps a row). Ties on ``order_col`` break
+    arbitrarily.
+
+    The rowtime form is two JVM state operators: a ``min_by``
+    aggregate keyed on ``keys`` holds the current first row, and in
+    update mode re-emits it for every key touched by a batch; the
+    ``dropDuplicates`` on (keys, order) after it passes only a new
+    minimum. State is one row per key plus one per emitted minimum."""
+    key_cols = [c for c in sdf.columns if c in keys]
+    rest = [c for c in sdf.columns if c not in keys]
+    if order_col is None:
+        return dedup_keep_first(sdf, keys, within_watermark=False).select(*key_cols, *rest)
+    order = F.col(order_col)
+    first = F.min_by(F.struct(*rest), F.struct(order.isNull(), order))
+    return (
+        sdf.groupBy(*key_cols)
+        .agg(first.alias("__first"))
+        .select(*key_cols, *[F.col("__first").getField(c).alias(c) for c in rest])
+        .dropDuplicates([*key_cols, order_col])
+    )
 
 
 def window_dedup_keep_first(sdf: DataFrame, ts: str, size: str, keys: list[str]) -> DataFrame:

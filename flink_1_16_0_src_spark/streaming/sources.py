@@ -18,6 +18,7 @@ giant batch.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import tempfile
@@ -79,7 +80,9 @@ def derived_stream_partitions(
     which wants core-level parallelism however small the input bytes
     are (measured at sf0.1: the window-topn drain 5.7 s at 32
     partitions → 16.9 s at 4 — the inverse of the state-store-commit
-    economics the byte rule targets)."""
+    economics the byte rule targets). Keep-first dedup drains
+    (stateful.keep_first_dedup) hold only JVM state, so they follow
+    the byte rule."""
     if not _pending_source_bytes:
         return None
     total = sum(_pending_source_bytes)
@@ -120,6 +123,22 @@ class _scoped_shuffle_partitions:
         return False
 
 
+def single_file_stream_dir(path: str, name: str) -> str:
+    """The file-stream source monitors a DIRECTORY; expose a single
+    parquet file through a symlink directory (no data copy). The
+    directory name is a stable digest of the file's path, so every
+    process — a restart resuming a checkpoint included — reads the
+    same source path (``hash()`` on str is salted per process)."""
+    path = os.path.abspath(path)
+    digest = hashlib.sha1(path.encode()).hexdigest()[:16]
+    link_dir = os.path.join(tempfile.gettempdir(), "spark_graft_streams", f"{digest}_{name}")
+    os.makedirs(link_dir, exist_ok=True)
+    link = os.path.join(link_dir, os.path.basename(path))
+    if not os.path.exists(link):
+        os.symlink(path, link)
+    return link_dir
+
+
 def stream_table(
     spark: SparkSession,
     sf_dir: str,
@@ -132,16 +151,7 @@ def stream_table(
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = spark.read.parquet(path).schema
     if os.path.isfile(path):
-        # the file-stream source monitors a DIRECTORY; expose the
-        # single-file fixture through a symlink dir (no data copy)
-        link_dir = os.path.join(
-            tempfile.gettempdir(), "spark_graft_streams", f"{abs(hash(sf_dir))}_{name}"
-        )
-        os.makedirs(link_dir, exist_ok=True)
-        link = os.path.join(link_dir, f"{name}.parquet")
-        if not os.path.exists(link):
-            os.symlink(path, link)
-        path = link_dir
+        path = single_file_stream_dir(path, name)
     note_source_bytes(path)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:

@@ -8,6 +8,9 @@ Reference parity:
   → :func:`streaming_topn` (state = current top-k rows per key).
 - keep-last deduplicate: StreamExecDeduplicate.java:85,
   ProcTimeDeduplicateKeepLastRowFunction.java:32 → :func:`keep_last_dedup`.
+  Keep-FIRST deduplicate does not use ``applyInPandasWithState``: Spark
+  has exact JVM state operators for it, so :func:`keep_first_dedup` is
+  re-exported from dedup.py, where every keep-first form lives.
 - streaming OVER (unbounded preceding): StreamExecOverAggregate.java:91,
   ProcTimeUnboundedPrecedingFunction.java → :func:`streaming_over_unbounded`.
 - changelog normalize: StreamExecChangelogNormalize.java:74 →
@@ -48,6 +51,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from flink_1_16_0_src_spark.streaming.dedup import keep_first_dedup  # noqa: F401
+
 _SCALARS = ("bigint", "int", "smallint", "tinyint", "double", "float", "string", "boolean")
 
 
@@ -62,13 +67,23 @@ def _py(v):
 
 
 def _carry_cols(sdf: DataFrame, keys: list[str]) -> list[str]:
-    cols = []
+    """The non-key columns a Python keyed-state operator carries. The
+    array-encoded state holds the types in ``_SCALARS`` plus timestamps
+    and decimals; any other column (array, map, struct, date, ...)
+    raises instead of vanishing from the output."""
+    cols, bad = [], []
     for name, dtype in sdf.dtypes:
         if name in keys:
             continue
         base = dtype.split("(")[0]
         if base in _SCALARS or base.startswith("timestamp") or base.startswith("decimal"):
             cols.append(name)
+        else:
+            bad.append(f"{name} {dtype}")
+    if bad:
+        raise ValueError(
+            "keyed-state operator cannot carry these columns: " + ", ".join(bad)
+        )
     return cols
 
 
@@ -172,56 +187,6 @@ def keep_last_dedup(
             for kc, kv in zip(keys, key):
                 out[kc] = kv
             yield out[[f.name for f in out_schema.fields]]
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def keep_first_dedup(
-    sdf: DataFrame, keys: list[str], order_col: str | None = None, ttl_ms: int | None = None
-) -> DataFrame:
-    """First row per key wins (DeduplicateKeepFirstRowFunction /
-    FirstRowFunction parity — the reference's
-    flink-table-runtime deduplicate keep-first path). ``order_col``
-    picks the MIN-order row within a batch and allows a later batch to
-    supersede with a smaller order value (rowtime semantics, update
-    emission); ``order_col=None`` is proctime arrival order — once a
-    key has state, later rows emit nothing. ``ttl_ms`` as keep_last."""
-    carry = _carry_cols(sdf, keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(key_fields + [f for f in sdf.schema.fields if f.name in carry])
-    base_schema = _array_state_schema(sdf, carry)
-    state_schema = StructType(list(base_schema.fields) + [StructField("__updated", DoubleType())])
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        import time as _time
-
-        now = _time.time()
-        fresh = state.exists and (
-            ttl_ms is None or (now - state.get[-1]) * 1000.0 <= ttl_ms
-        )
-        first = tuple(v[0] for v in state.get[:-1]) if fresh else None
-        changed = False
-        for pdf in pdfs:
-            if len(pdf):
-                p = pdf.sort_values(order_col, kind="stable") if order_col else pdf
-                # per-column extraction — see keep_last_dedup dtype note
-                cand = tuple(_py(p[c].iloc[0]) for c in carry)
-                if first is None or (
-                    order_col is not None
-                    and cand[carry.index(order_col)] < first[carry.index(order_col)]
-                ):
-                    first = cand
-                    changed = True
-        if changed:
-            state.update(tuple([_py(v)] for v in first) + (now,))
-            out = pd.DataFrame([first], columns=carry)
-            for kc, kv in zip(keys, key):
-                out[kc] = kv
-            yield out[[f.name for f in out_schema.fields]]
-        elif first is not None:
-            state.update(tuple([_py(v)] for v in first) + (now,))
 
     return sdf.groupBy(*keys).applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout

@@ -68,6 +68,7 @@ _SLOW_TESTS = {
     "test_changelog_normalize",
     "test_keep_first_dedup_cross_batch",
     "test_keep_first_dedup_proctime_no_reemit",
+    "test_keep_first_dedup_edge_inputs",
     "test_keep_last_dedup_matches_batch",
     "test_keep_last_dedup_ttl_expiry",
     "test_keyed_inactivity_timer_fires_on_watermark",
@@ -141,6 +142,27 @@ def pytest_collection_modifyitems(config, items):
             if (qname in _SLOW_ORACLE_QUERIES
                     or "streaming" in tags or "stateful" in tags):
                 item.add_marker(slow)
+
+
+# the terminal summary reports how many deselected tests carry the slow
+# marker, so a default-tier run says what it left out
+_SLOW_DESELECTED = pytest.StashKey[int]()
+
+
+def pytest_deselected(items):
+    if items:
+        stash = items[0].config.stash
+        n = sum(1 for it in items if it.get_closest_marker("slow"))
+        stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + n
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    n = config.stash.get(_SLOW_DESELECTED, 0)
+    if n:
+        terminalreporter.write_line(
+            f"{n} deselected tests are marked slow "
+            '(run them with -m slow, or everything with -m "slow or not slow")'
+        )
 
 
 @pytest.fixture(scope="session")

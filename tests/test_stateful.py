@@ -507,6 +507,51 @@ def test_keep_first_dedup_proctime_no_reemit(spark, tmp_path):
     assert got2 == set()
 
 
+@pytest.mark.parametrize("order_col", [None, "seq"])
+def test_keep_first_dedup_edge_inputs(spark, tmp_path, order_col):
+    """Both keep_first_dedup forms over two micro-batches: an array
+    payload is carried, the output puts the keys first, a NULL key is a
+    key of its own, a key whose rows all have a NULL order keeps its
+    payload, and (rowtime) a NULL order loses to a non-NULL one, in a
+    batch and across batches."""
+    schema = "seq bigint, k string, tags array<string>"
+    if order_col is None:
+        b1 = [(1, "a", ["x"]), (None, "b", ["p"]), (4, None, ["r"])]
+        b2 = [(0, "a", ["later"]), (1, None, ["q"]), (2, "d", ["d"])]
+        exp = {("a", 1, ("x",)), ("b", None, ("p",)), (None, 4, ("r",)), ("d", 2, ("d",))}
+    else:
+        b1 = [
+            (2, "a", ["x"]), (None, "a", ["n"]), (5, "a", ["y"]),
+            (None, "b", ["p"]), (7, None, ["q"]), (3, None, ["r"]),
+            (None, "c", ["m"]),
+        ]
+        b2 = [(1, "a", ["w"]), (None, "b", ["p2"]), (5, None, ["s"]), (9, "c", ["z"])]
+        # batch 1 emits each key's first row; batch 2 only the new
+        # minima: a (1 < 2) and c (non-NULL beats NULL)
+        exp = {
+            ("a", 2, ("x",)), ("b", None, ("p",)), (None, 3, ("r",)), ("c", None, ("m",)),
+            ("a", 1, ("w",)), ("c", 9, ("z",)),
+        }
+    sdf = scripted_stream(
+        spark, [spark.createDataFrame(b, schema) for b in (b1, b2)], tmp_path
+    )
+    out = stateful.keep_first_dedup(sdf, ["k"], order_col=order_col)
+    assert out.columns == ["k", "seq", "tags"]
+    got = sources.run_to_memory(out, f"kf_edge_{order_col}", "update").collect()
+    assert len(got) == len(exp)
+    assert {(r.k, r.seq, tuple(r.tags)) for r in got} == exp
+
+
+def test_carry_cols_raises_on_uncarried_columns(spark):
+    """A Python keyed-state operator names the columns its state cannot
+    carry instead of dropping them from the output."""
+    df = spark.createDataFrame(
+        [(1, 2.0, ["x"], {"a": 1})], "k bigint, v double, tags array<string>, m map<string,int>"
+    )
+    with pytest.raises(ValueError, match="tags array<string>, m map<string,int>"):
+        stateful.streaming_topn(df, ["k"], "v", 2)
+
+
 def test_streaming_over_multi_cross_batch_tail(spark, tmp_path):
     """streaming_over_multi: the bounded frame spans MICRO-BATCH
     boundaries via the JSON tail state (RowTimeRowsBoundedPreceding

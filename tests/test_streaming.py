@@ -8,6 +8,10 @@ of Flink's OneInputStreamOperatorTestHarness assertions.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -102,6 +106,32 @@ def test_stream_dedup_keep_first(spark, events_batch):
         events_batch.select("user_id", "event_type").distinct(), "user_id", "event_type"
     )
     assert _sorted_rows(got.select("user_id", "event_type"), "user_id", "event_type") == exp_keys
+
+
+def test_single_file_stream_dir_stable_across_processes(tmp_path):
+    """The symlink directory that exposes a single-file table to the
+    file-stream source has the same name in every process, whatever its
+    str-hash salt — a fresh process resuming a checkpoint must read the
+    same source path."""
+    f = tmp_path / "events.parquet"
+    f.write_bytes(b"")
+    code = (
+        "import sys\n"
+        "from flink_1_16_0_src_spark.streaming.sources import single_file_stream_dir\n"
+        "print(single_file_stream_dir(sys.argv[1], 'events'))"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dirs = set()
+    for seed in ("1", "2"):
+        env = {**os.environ, "PYTHONHASHSEED": seed, "TMPDIR": str(tmp_path), "PYTHONPATH": root}
+        res = subprocess.run(
+            [sys.executable, "-c", code, str(f)], env=env, cwd=root,
+            capture_output=True, text=True, check=True, timeout=120,
+        )
+        dirs.add(res.stdout.strip())
+    assert len(dirs) == 1
+    (d,) = dirs
+    assert os.path.realpath(os.path.join(d, "events.parquet")) == os.path.realpath(f)
 
 
 def test_stream_window_dedup(spark, events_batch):
