@@ -30,7 +30,8 @@ Reference parity (SURVEY.md §2.8):
 
 Execution model: the NFA core is pure Python over one key's ordered
 rows; Spark distributes it per key via ``applyInPandas`` (batch) /
-``applyInPandasWithState`` (streaming, buffer carried across batches).
+streaming.keyed.json_state_operator (streaming: the row buffer is one
+JSON state document per key, carried across batches).
 Per-key sequential scan is inherent to CEP — the reference runs the
 same way inside its keyed operator; the 100 TB story is key
 parallelism, not intra-key parallelism.
@@ -40,12 +41,14 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass
-from typing import Callable, Iterable
+from typing import Callable
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from flink_1_16_0_src_spark.streaming.keyed import json_state_operator
 
 Row = dict
 Matched = dict  # var name -> list[Row]
@@ -1360,16 +1363,6 @@ def match_recognize_with_timeouts(
     return main, touts
 
 
-def _canon_row(d: dict) -> dict:
-    """Canonicalize a buffered row through the SAME json.dumps/loads
-    round-trip the state restore applies, so a row's column types never
-    depend on which micro-batch it arrived in (a fresh-batch row kept
-    pd.Timestamp/bytes where a state-restored one carried their str()
-    forms — a user predicate or measure reading such a column saw
-    different types for the same logical row; ADVICE r3)."""
-    return json.loads(json.dumps(d, default=str))
-
-
 def match_recognize_stream(
     sdf: DataFrame,
     partition_by: list[str],
@@ -1428,6 +1421,26 @@ def match_recognize_stream(
             "path re-enumerates through the vectorized batch matcher, "
             "which has no in-buffer helper fields"
         )
+    emit_schema = (
+        _combined_schema(output_schema, timeout_schema)
+        if timeout_measures is not None
+        else output_schema
+    )
+
+    def run(step):
+        # a union frame keeps None (not NaN) in the other side's columns
+        return json_state_operator(
+            sdf, partition_by, step, emit_schema, sort_by=order_by,
+            none_for_nan=timeout_measures is not None,
+        )
+
+    # secondary_order makes same-timestamp ordering (and therefore
+    # which rows count as "later" for relaxed_any matching)
+    # arrival-independent — pass a unique column (e.g. event id) so
+    # a regenerated fixture with ts ties cannot flake
+    def buffer_key(r):
+        return (r[order_by], r[secondary_order]) if secondary_order else r[order_by]
+
     if _needs_any_path(steps):
         # followedByAny/allowCombinations (SKIP_TILL_ANY) stream through a different
         # state shape: anchors stay live after matching (one anchor
@@ -1440,45 +1453,19 @@ def match_recognize_stream(
                 "(the only coherent skip mode for all-anchors emission — "
                 "Flink couples SKIP_TILL_ANY with NO_SKIP the same way)"
             )
-        return _match_recognize_stream_any(
-            sdf, partition_by, order_by, steps, measures, output_schema, within,
-            secondary_order=secondary_order,
-            timeout_measures=timeout_measures, timeout_schema=timeout_schema,
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField
-
-    state_schema = StructType([StructField("buf", ArrayType(StringType()))])
+        return run(_stream_any_step(
+            partition_by, order_by, steps, measures, within, buffer_key, timeout_measures
+        ))
     vectorized = steps_vectorizable(steps)
     delta = pd.Timedelta(within) if within is not None else None
-    emit_schema = (
-        _combined_schema(output_schema, timeout_schema)
-        if timeout_measures is not None
-        else output_schema
-    )
 
-    emit_cols = [f.name for f in emit_schema.fields]
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
+    def step(key, rows, buf):
         use_ts = delta is not None
-        buf = []
-        if state.exists:
-            for s in state.get[0]:
-                d = json.loads(s)
-                if use_ts:
-                    d[order_by] = pd.Timestamp(d[order_by])
-                buf.append(d)
-        for pdf in pdfs:
-            for d in pdf.sort_values(order_by, kind="stable").to_dict("records"):
-                d = _canon_row(d)
-                if use_ts:
-                    d[order_by] = pd.Timestamp(d[order_by])
-                buf.append(d)
-        buf.sort(
-            key=(lambda r: (r[order_by], r[secondary_order]))
-            if secondary_order
-            else (lambda r: r[order_by])
-        )
+        buf = (buf or []) + rows
+        if use_ts:
+            for d in buf:
+                d[order_by] = pd.Timestamp(d[order_by])
+        buf.sort(key=buffer_key)
         if prev_next:
             # PREV/NEXT = index offsets into the sorted per-key buffer,
             # refreshed each batch; out-of-buffer neighbors are NULL
@@ -1549,8 +1536,7 @@ def match_recognize_stream(
             m = try_match(i)
             if m is not None:
                 matched, idx = m
-                rec = dict.fromkeys(emit_cols)
-                rec.update(zip(partition_by, key))
+                rec = dict(zip(partition_by, key))
                 for name, fmeas in measures.items():
                     rec[name] = fmeas(matched)
                 if timeout_measures is not None:
@@ -1569,8 +1555,7 @@ def match_recognize_stream(
                     if timeout_measures is not None:
                         partial = longest_partial(i)
                         if partial is not None:
-                            rec = dict.fromkeys(emit_cols)
-                            rec.update(zip(partition_by, key))
+                            rec = dict(zip(partition_by, key))
                             tts = buf[i][order_by] + delta
                             for name, fmeas in timeout_measures.items():
                                 rec[name] = fmeas(partial, tts)
@@ -1583,45 +1568,31 @@ def match_recognize_stream(
             else:
                 i += 1
                 consumed = i  # row i can never start a match; drop it
-        buf = buf[consumed:]
-        state.update(([json.dumps(r, default=str) for r in buf],))
-        res = pd.DataFrame(out, columns=emit_cols)
-        if timeout_measures is not None:
-            # union frame: keep None (not NaN) in the other side's columns
-            res = res.astype(object).where(res.notna(), None)
-        # JSON round-trip stringifies timestamps — restore declared dtypes
-        for f in emit_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        return out, buf[consumed:]
 
-    return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, emit_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return run(step)
 
 
-def _match_recognize_stream_any(
-    sdf: DataFrame,
+def _stream_any_step(
     partition_by: list[str],
     order_by: str,
     steps: list[Step],
     measures: dict[str, Callable[[Matched], object]],
-    output_schema: StructType,
     within: str,
-    secondary_order: str | None = None,
+    buffer_key: Callable[[Row], object],
     timeout_measures: dict[str, Callable[[Matched, object], object]] | None = None,
-    timeout_schema: StructType | None = None,
-) -> DataFrame:
-    """Streaming followedByAny (SKIP_TILL_ANY — NFA.java:86's
-    skip-till-any transition): every batch re-enumerates ALL anchors in
+) -> Callable:
+    """Step function of streaming followedByAny (SKIP_TILL_ANY —
+    NFA.java:86's skip-till-any transition): every batch re-enumerates ALL anchors in
     the retained window with the batch all-anchors matcher and emits
     only matches not already emitted (md5 fingerprint set in state).
     Anchors stay live after a match — an A already paired with B1 still
     pairs with a later-arriving B2 — which is exactly why the
     deterministic path's consume-prefix buffer can't express it.
 
-    State = rows within ``within`` of the newest timestamp + emitted
-    fingerprints anchored inside that window; both prune together, so
+    State (the JSON document [rows, fingerprints]) = rows within
+    ``within`` of the newest timestamp + emitted fingerprints anchored
+    inside that window; both prune together, so
     state is bounded by the window's row count (the same windowTime
     bound Flink requires for SKIP_TILL_ANY state cleanup). Caveat: a
     match arriving entirely BELOW the prune cutoff (very late data) is
@@ -1634,52 +1605,21 @@ def _match_recognize_stream_any(
     contract as the deterministic path's handler."""
     import hashlib
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField
-
-    state_schema = StructType(
-        [
-            StructField("buf", ArrayType(StringType())),
-            StructField("emitted", ArrayType(StringType())),
-        ]
-    )
     delta = pd.Timedelta(within)
     vec_ready = steps_all_vec(steps)
-    emit_schema = (
-        _combined_schema(output_schema, timeout_schema)
-        if timeout_measures is not None
-        else output_schema
-    )
-    emit_cols = [f.name for f in emit_schema.fields]
 
     def _row_md5(r) -> str:
         return hashlib.md5(
             json.dumps(r, default=str, sort_keys=True).encode()
         ).hexdigest()
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        buf: list = []
-        emitted: set = set()
-        if state.exists:
-            for s in state.get[0]:
-                d = json.loads(s)
-                d[order_by] = pd.Timestamp(d[order_by])
-                buf.append(d)
-            emitted = set(state.get[1])
-        for pdf in pdfs:
-            for d in pdf.sort_values(order_by, kind="stable").to_dict("records"):
-                d = _canon_row(d)
-                d[order_by] = pd.Timestamp(d[order_by])
-                buf.append(d)
-        # secondary_order makes same-timestamp ordering (and therefore
-        # which rows count as "later" for relaxed_any matching)
-        # arrival-independent — pass a unique column (e.g. event id) so
-        # a regenerated fixture with ts ties cannot flake (ADVICE r3)
-        buf.sort(
-            key=(lambda r: (r[order_by], r[secondary_order]))
-            if secondary_order
-            else (lambda r: r[order_by])
-        )
+    def step(key, rows, doc):
+        buf, emitted = doc or ([], [])
+        buf += rows
+        emitted = set(emitted)
+        for d in buf:
+            d[order_by] = pd.Timestamp(d[order_by])
+        buf.sort(key=buffer_key)
         wt = (order_by, delta)
         if vec_ready and buf:
             # hoisted-mask any-path: DEFINE masks + jump tables computed
@@ -1728,9 +1668,7 @@ def _match_recognize_stream_any(
                 if fp in emitted:
                     continue
                 emitted.add(fp)
-                rec = (dict.fromkeys(emit_cols)
-                       if timeout_measures is not None else {})
-                rec.update(zip(partition_by, key))
+                rec = dict(zip(partition_by, key))
                 for name, fmeas in measures.items():
                     rec[name] = fmeas(matched)
                 if timeout_measures is not None:
@@ -1751,8 +1689,7 @@ def _match_recognize_stream_any(
                     partial = _longest_partial_at_any(buf, i, steps, wt)
                     if partial is None:
                         continue
-                    rec = dict.fromkeys(emit_cols)
-                    rec.update(zip(partition_by, key))
+                    rec = dict(zip(partition_by, key))
                     tts = r[order_by] + delta
                     for name, fmeas in timeout_measures.items():
                         rec[name] = fmeas(partial, tts)
@@ -1762,21 +1699,9 @@ def _match_recognize_stream_any(
             emitted = {
                 fp for fp in emitted if pd.Timestamp(fp.split("|", 1)[0]) >= cutoff
             }
-        state.update(
-            ([json.dumps(r, default=str) for r in buf], sorted(emitted))
-        )
-        res = pd.DataFrame(out, columns=emit_cols)
-        if timeout_measures is not None:
-            # union frame: keep None (not NaN) in the other side's columns
-            res = res.astype(object).where(res.notna(), None)
-        for f in emit_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        return out, [buf, sorted(emitted)]
 
-    return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, emit_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return step
 
 
 # ---- Pattern API facade (flink-cep Pattern.java / CEP.java) ---------------

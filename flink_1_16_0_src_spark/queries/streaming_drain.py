@@ -495,7 +495,7 @@ def stream_cep_any_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     match — all-pairs semantics, which is exactly a self-join in SQL,
     so the oracle is the interval self-join. Exercises the windowed
     all-anchors re-enumeration + emitted-fingerprint state path
-    (operators/cep._match_recognize_stream_any). "Later" is the
+    (operators/cep._stream_any_step). "Later" is the
     deterministic buffer order (ts, event_id) — secondary_order makes
     same-timestamp pairs arrival-independent, and the oracle's
     inequality mirrors that exact tie rule (ADVICE r3; current

@@ -2308,7 +2308,7 @@ class TableEnvironment:
         # opaque error) — lower the single-spec SELECT ... OVER ...
         # FROM t statement onto the custom stateful operators
         # (StreamExecOverAggregate.java:91 ≈ streaming/stateful.py
-        # streaming_over_unbounded / streaming_over_bounded).
+        # streaming_over_multi).
         # MATCH_RECOGNIZE's own OVER usage was consumed by the lowering
         # above; statements mixing window TVFs with OVER are out of
         # scope (the reference plans them as separate exec nodes —

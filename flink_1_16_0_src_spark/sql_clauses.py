@@ -1327,17 +1327,17 @@ def lower_streaming_over(
 ) -> DataFrame:
     """Lower a streaming ``SELECT ... agg(x) OVER (PARTITION BY k ORDER
     BY rowtime [frame]) ... FROM t [WHERE ...]`` statement onto the
-    custom stateful OVER operators — Structured Streaming has no
-    Catalyst OVER lowering, so this is the StreamExecOverAggregate
-    path (EXEC-S/StreamExecOverAggregate.java:91):
+    custom stateful OVER operator streaming_over_multi — Structured
+    Streaming has no Catalyst OVER lowering, so this is the
+    StreamExecOverAggregate path (EXEC-S/StreamExecOverAggregate.java:91):
 
-    - no frame / UNBOUNDED PRECEDING → streaming_over_unbounded
+    - no frame / UNBOUNDED PRECEDING → streaming_over_multi()
       (ProcTimeUnboundedPrecedingFunction.java contract);
     - ``ROWS BETWEEN n PRECEDING AND CURRENT ROW`` →
-      streaming_over_bounded(rows=n+1)
+      streaming_over_multi(rows=n+1)
       (RowTimeRowsBoundedPrecedingFunction.java);
     - ``RANGE BETWEEN INTERVAL 'x' U PRECEDING AND CURRENT ROW`` →
-      streaming_over_bounded(range_interval=...)
+      streaming_over_multi(range_interval=...)
       (RowTimeRangeBoundedPrecedingFunction.java).
 
     Scope (the reference's own planner restrictions, plus the repo's

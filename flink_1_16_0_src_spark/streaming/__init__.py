@@ -6,5 +6,5 @@ Reference parity map (SURVEY.md §2.9, §2.3, §2.4, §2.6):
 - streaming deduplicate → dedup.py
 - window join / interval join → joins.py
 - stateful custom ops (Top-N, keep-last, streaming OVER, changelog) →
-  stateful.py
+  stateful.py, on the Python keyed-state skeletons in keyed.py
 """

@@ -21,8 +21,12 @@ runs on Spark's JVM state operators — no Python keyed state:
 
 from __future__ import annotations
 
+import pandas as pd
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from flink_1_16_0_src_spark.streaming.keyed import json_state_operator
 
 
 def dedup_keep_first(sdf: DataFrame, keys: list[str], within_watermark: bool = True) -> DataFrame:
@@ -97,50 +101,21 @@ def temporal_sort(
     Row order is guaranteed within each emitted per-key batch (Spark
     gives no cross-partition ordering downstream — same restriction the
     reference has across parallel subtasks). State = the not-yet-final
-    tail per key, bounded by ``delay``."""
-    import json
-
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-    state_schema = StructType(
-        [
-            StructField("buf", ArrayType(StringType())),
-            StructField("clock", StringType()),
-        ]
-    )
-    output_schema = sdf.schema
+    tail per key, bounded by ``delay``: the JSON state document holds
+    those rows and the carried clock (max seen ts)."""
     delay_td = pd.Timedelta(delay)
 
-    def fn(key, pdfs, state):
-        if state.exists:
-            buf = [json.loads(s) for s in state.get[0]]
-            clock = pd.Timestamp(state.get[1]) if state.get[1] else None
-        else:
-            buf, clock = [], None
-        for pdf in pdfs:
-            for d in pdf.to_dict("records"):
-                d = json.loads(json.dumps(d, default=str))
-                buf.append(d)
-                t = pd.Timestamp(d[ts])
-                clock = t if clock is None else max(clock, t)
+    def step(key, rows, doc):
+        buf, clock = doc or ([], None)
+        clock = pd.Timestamp(clock) if clock else None
+        for d in rows:
+            t = pd.Timestamp(d[ts])
+            clock = t if clock is None else max(clock, t)
         out, keep = [], []
         wm = clock - delay_td if clock is not None else None
-        for d in buf:
+        for d in buf + rows:
             (out if wm is not None and pd.Timestamp(d[ts]) <= wm else keep).append(d)
         out.sort(key=lambda d: pd.Timestamp(d[ts]))
-        state.update(
-            ([json.dumps(d) for d in keep], clock.isoformat() if clock else None)
-        )
-        cols = [f.name for f in output_schema.fields]
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        return out, [keep, clock.isoformat() if clock else None]
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return json_state_operator(sdf, keys, step, sdf.schema)

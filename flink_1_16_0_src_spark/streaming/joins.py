@@ -10,7 +10,8 @@ Reference parity (SURVEY.md §2.4):
   window end.
 - Unbounded stream-stream join with update output
   (StreamingJoinOperator.java:36) → ``unbounded_join``: dual per-key
-  row buffers in ``applyInPandasWithState``, ``__rowkind`` changelog
+  row buffers in one JSON state document per key
+  (keyed.json_state_operator), ``__rowkind`` changelog
   output (+I pairs; left-outer retracts null padding with -D on the
   numMatches 0→1 transition), optional event-time TTL with
   expire-on-access semantics.
@@ -77,8 +78,9 @@ def unbounded_join(
 
     Spark has no two-input keyed operator, so both sides are tagged and
     unioned (the same connect() reduction datastream.ConnectedStreams
-    uses) and a single ``applyInPandasWithState`` keeps the dual
-    per-key row buffers Flink keeps in its left/right state views.
+    uses) and a single keyed-state operator keeps the dual per-key row
+    buffers Flink keeps in its left/right state views, plus each stored
+    row's match counter, in one JSON document per key.
 
     Output is a changelog with an explicit ``__rowkind`` column (Spark
     has no retraction rows — SURVEY.md §7.3 risk 1):
@@ -108,14 +110,9 @@ def unbounded_join(
 
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from flink_1_16_0_src_spark.streaming.keyed import json_state_operator
 
     assert how in ("inner", "left_outer", "full_outer", "left_semi", "left_anti"), (
         f"unsupported how={how!r}"
@@ -133,15 +130,6 @@ def unbounded_join(
         else []
     )
     output_schema = StructType(out_fields + [StructField("__rowkind", StringType())])
-    # state: JSON rows per side + per-left-row match counters
-    state_schema = StructType(
-        [
-            StructField("lbuf", ArrayType(StringType())),
-            StructField("rbuf", ArrayType(StringType())),
-            StructField("lmatches", ArrayType(LongType())),
-            StructField("rmatches", ArrayType(LongType())),
-        ]
-    )
 
     tagged = left.select(
         F.col(lk).cast("string").alias("__key"),
@@ -159,14 +147,9 @@ def unbounded_join(
     lts, rts, interval = ttl if ttl else (None, None, None)
     delta = pd.Timedelta(interval) if interval else None
 
-    def fn(pkey, pdfs, state):
-        if state.exists:
-            lbuf = [json.loads(s) for s in state.get[0]]
-            rbuf = [json.loads(s) for s in state.get[1]]
-            lmatches = list(state.get[2])
-            rmatches = list(state.get[3])
-        else:
-            lbuf, rbuf, lmatches, rmatches = [], [], [], []
+    # state document: the stored rows of each side + per-row match counters
+    def step(pkey, rows, doc):
+        lbuf, rbuf, lmatches, rmatches = doc or ([], [], [], [])
         out = []
 
         def emit(lrow, rrow, kind):
@@ -195,50 +178,49 @@ def unbounded_join(
                 ts = pd.Timestamp(row[ts_col])
                 max_ts = ts if max_ts is None else max(max_ts, ts)
 
-        for pdf in pdfs:
-            for t in pdf.to_dict("records"):
-                row = json.loads(t["__payload"])
-                if t["__side"] == 1:
-                    tick(row, lts)
-                    n = 0
-                    for j, rrow in enumerate(rbuf):
-                        if fresh(rrow, rts):
-                            if how == "full_outer" and rmatches[j] == 0:
-                                emit(None, rrow, "-D")  # retract right padding
-                            if pairs:
-                                emit(row, rrow, "+I")
-                            rmatches[j] += 1
-                            n += 1
-                    if n == 0 and how in ("left_outer", "full_outer"):
-                        emit(row, None, "+I")
-                    elif n > 0 and how == "left_semi":
-                        emit(row, None, "+I")  # EXISTS satisfied on arrival
-                    elif n == 0 and how == "left_anti":
-                        emit(row, None, "+I")  # NOT EXISTS holds (for now)
-                    lbuf.append(row)
-                    lmatches.append(n)
-                else:
-                    tick(row, rts)
-                    n = 0
-                    for i, lrow in enumerate(lbuf):
-                        if not fresh(lrow, lts):
-                            continue
-                        if lmatches[i] == 0:
-                            # numMatches 0→1 transition
-                            if how in ("left_outer", "full_outer"):
-                                emit(lrow, None, "-D")  # retract null padding
-                            elif how == "left_semi":
-                                emit(lrow, None, "+I")  # EXISTS newly true
-                            elif how == "left_anti":
-                                emit(lrow, None, "-D")  # NOT EXISTS now false
+        for t in rows:
+            row = json.loads(t["__payload"])
+            if t["__side"] == 1:
+                tick(row, lts)
+                n = 0
+                for j, rrow in enumerate(rbuf):
+                    if fresh(rrow, rts):
+                        if how == "full_outer" and rmatches[j] == 0:
+                            emit(None, rrow, "-D")  # retract right padding
                         if pairs:
-                            emit(lrow, row, "+I")
-                        lmatches[i] += 1
+                            emit(row, rrow, "+I")
+                        rmatches[j] += 1
                         n += 1
-                    if n == 0 and how == "full_outer":
-                        emit(None, row, "+I")  # unmatched right padded
-                    rbuf.append(row)
-                    rmatches.append(n)
+                if n == 0 and how in ("left_outer", "full_outer"):
+                    emit(row, None, "+I")
+                elif n > 0 and how == "left_semi":
+                    emit(row, None, "+I")  # EXISTS satisfied on arrival
+                elif n == 0 and how == "left_anti":
+                    emit(row, None, "+I")  # NOT EXISTS holds (for now)
+                lbuf.append(row)
+                lmatches.append(n)
+            else:
+                tick(row, rts)
+                n = 0
+                for i, lrow in enumerate(lbuf):
+                    if not fresh(lrow, lts):
+                        continue
+                    if lmatches[i] == 0:
+                        # numMatches 0→1 transition
+                        if how in ("left_outer", "full_outer"):
+                            emit(lrow, None, "-D")  # retract null padding
+                        elif how == "left_semi":
+                            emit(lrow, None, "+I")  # EXISTS newly true
+                        elif how == "left_anti":
+                            emit(lrow, None, "-D")  # NOT EXISTS now false
+                    if pairs:
+                        emit(lrow, row, "+I")
+                    lmatches[i] += 1
+                    n += 1
+                if n == 0 and how == "full_outer":
+                    emit(None, row, "+I")  # unmatched right padded
+                rbuf.append(row)
+                rmatches.append(n)
         if ttl_expr and max_ts is not None:
             keep = [
                 i for i, r in enumerate(lbuf)
@@ -252,21 +234,6 @@ def unbounded_join(
             ]
             rbuf = [rbuf[j] for j in rkeep]
             rmatches = [rmatches[j] for j in rkeep]
-        state.update(
-            (
-                [json.dumps(r, default=str) for r in lbuf],
-                [json.dumps(r, default=str) for r in rbuf],
-                lmatches,
-                rmatches,
-            )
-        )
-        cols = [f.name for f in output_schema.fields]
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        return out, [lbuf, rbuf, lmatches, rmatches]
 
-    return tagged.groupBy("__key").applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return json_state_operator(tagged, ["__key"], step, output_schema)

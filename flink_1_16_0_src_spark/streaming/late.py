@@ -21,18 +21,21 @@ splits each batch into on-time/late before handing both to user sinks.
 Late rows are detected at batch granularity — the documented timer
 skew (SURVEY.md §7.3 risk 3).
 
-Count windows buffer per key in ``applyInPandasWithState``; state is
-bounded by window size (the leftover partial window only).
+Count and delta windows buffer rows per key in one JSON state document
+(keyed.json_state_operator); count-window state is bounded by window
+size (the leftover partial window only).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterable
+from typing import Callable
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from flink_1_16_0_src_spark.streaming.keyed import json_state_operator
 
 
 class LateRowRouter:
@@ -107,27 +110,17 @@ def streaming_count_window(
     ``size`` rows form a window; ``agg_fn(window_pdf) -> dict`` emits
     one output row per fired window (the window function). The
     under-full tail is carried in state — bounded by ``size`` rows per
-    key. Row order inside a key follows arrival order (same caveat as
+    key; the JSON state document is the list of buffered rows. Row
+    order inside a key follows arrival order (same caveat as
     Flink's count windows, which are arrival-ordered too); Spark gives
     no per-key FIFO inside a micro-batch, so pass ``order_col`` to sort
     each batch's rows before buffering when window membership must be
     deterministic."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField
-
     if isinstance(output_schema, str):
         output_schema = StructType.fromDDL(output_schema)
-    state_schema = StructType([StructField("buf", ArrayType(StringType()))])
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        buf = [json.loads(s) for s in state.get[0]] if state.exists else []
-        for pdf in pdfs:
-            if order_col is not None:
-                pdf = pdf.sort_values(order_col, kind="stable")
-            for d in pdf.to_dict("records"):
-                buf.append(json.loads(json.dumps(d, default=str)))
+    def step(key, rows, buf):
+        buf = (buf or []) + rows
         out = []
         while len(buf) >= size:
             window, buf = buf[:size], buf[size:]
@@ -138,17 +131,9 @@ def streaming_count_window(
             rec = dict(zip(keys, key))
             rec.update(agg_fn(wpdf))
             out.append(rec)
-        state.update(([json.dumps(r, default=str) for r in buf],))
-        cols = [f.name for f in output_schema.fields]
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        return out, buf
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return json_state_operator(sdf, keys, step, output_schema, sort_by=order_col)
 
 
 def streaming_delta_trigger_window(
@@ -175,38 +160,15 @@ def streaming_delta_trigger_window(
     guarantee WITHIN a micro-batch (Flink's network stack does between
     operator instances) — pass ``order_col`` to sort each micro-batch's
     rows before the trigger loop when delta semantics depend on
-    sequence."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField
-
+    sequence. The JSON state document holds the open buffer and the
+    anchor row."""
     if isinstance(output_schema, str):
         output_schema = StructType.fromDDL(output_schema)
-    # state: [0] = open-buffer rows (json), [1] = anchor row (json or None)
-    state_schema = StructType(
-        [
-            StructField("buf", ArrayType(StringType())),
-            StructField("anchor", StringType()),
-        ]
-    )
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            buf = [json.loads(s) for s in state.get[0]]
-            anchor = json.loads(state.get[1]) if state.get[1] else None
-        else:
-            buf, anchor = [], None
+    def step(key, rows, doc):
+        buf, anchor = doc or ([], None)
         out = []
-        batch_rows = []
-        for pdf in pdfs:
-            if order_col is not None:
-                pdf = pdf.sort_values(order_col, kind="stable")
-            batch_rows.extend(pdf.to_dict("records"))
-        if order_col is not None:
-            batch_rows.sort(key=lambda r: r[order_col])
-        for d in batch_rows:
-            d = json.loads(json.dumps(d, default=str))
+        for d in rows:
             buf.append(d)
             if anchor is None:
                 # first element seeds the delta anchor (DeltaTrigger
@@ -218,19 +180,9 @@ def streaming_delta_trigger_window(
                 out.append(rec)
                 buf = []
                 anchor = d
-        state.update(
-            ([json.dumps(r) for r in buf], json.dumps(anchor) if anchor else None)
-        )
-        cols = [f.name for f in output_schema.fields]
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        return out, [buf, anchor]
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return json_state_operator(sdf, keys, step, output_schema, sort_by=order_col)
 
 
 def continuous_event_time_fire(sdf: DataFrame, ts_col: str, size: str, interval: str, keys: list[str], *aggs):

@@ -1,18 +1,30 @@
 """Custom stateful streaming operators — the Flink-only semantics Spark
 has no builtin for (SURVEY.md §2 "custom" rows), on
 ``applyInPandasWithState`` (per-key managed state + Arrow batches, the
-Spark analog of Flink's keyed ValueState).
+Spark analog of Flink's keyed ValueState). How a key's state is stored
+lives in keyed.py: Top-N, keep-last dedup and changelog normalize keep
+one array per carried column (``keyed.array_state_operator``); the
+as-of join keeps one JSON document per key
+(``keyed.json_state_operator``). Each operator here is a pure step
+function over one key's rows.
 
 Reference parity:
 - streaming Top-N: StreamExecRank.java:83, AppendOnlyTopNFunction.java
-  → :func:`streaming_topn` (state = current top-k rows per key).
+  → :func:`streaming_topn` (state = current top-k rows per key). It
+  ranks with ``windows._topk_merge``, the kernel ``window_topn`` uses:
+  order column, then payload columns; NULL order values LAST under
+  DESC and FIRST under ASC (Spark's default null ordering).
 - keep-last deduplicate: StreamExecDeduplicate.java:85,
   ProcTimeDeduplicateKeepLastRowFunction.java:32 → :func:`keep_last_dedup`.
   Keep-FIRST deduplicate does not use ``applyInPandasWithState``: Spark
   has exact JVM state operators for it, so :func:`keep_first_dedup` is
   re-exported from dedup.py, where every keep-first form lives.
-- streaming OVER (unbounded preceding): StreamExecOverAggregate.java:91,
-  ProcTimeUnboundedPrecedingFunction.java → :func:`streaming_over_unbounded`.
+- streaming OVER: StreamExecOverAggregate.java:91 →
+  :func:`streaming_over_multi` (UNBOUNDED, ROWS n and RANGE interval
+  PRECEDING; the SQL lowering's operator). :func:`streaming_over_unbounded`
+  (ProcTimeUnboundedPrecedingFunction.java) and
+  :func:`streaming_over_bounded` (RowTime{Rows,Range}BoundedPrecedingFunction)
+  are that operator with COUNT/SUM/AVG/MIN/MAX on one column.
 - changelog normalize: StreamExecChangelogNormalize.java:74 →
   :func:`changelog_normalize` (emits explicit ``__rowkind`` +I/-U/+U/-D
   — Spark has no retraction rows, so the changelog is a visible column,
@@ -52,44 +64,13 @@ from pyspark.sql.types import (
 )
 
 from flink_1_16_0_src_spark.streaming.dedup import keep_first_dedup  # noqa: F401
-
-_SCALARS = ("bigint", "int", "smallint", "tinyint", "double", "float", "string", "boolean")
-
-
-def _py(v):
-    """Normalize numpy/pandas scalars to Python natives — the JVM-side
-    state pickler rejects numpy dtypes."""
-    if hasattr(v, "to_pydatetime"):
-        return v.to_pydatetime()
-    if hasattr(v, "item"):
-        return v.item()
-    return v
-
-
-def _carry_cols(sdf: DataFrame, keys: list[str]) -> list[str]:
-    """The non-key columns a Python keyed-state operator carries. The
-    array-encoded state holds the types in ``_SCALARS`` plus timestamps
-    and decimals; any other column (array, map, struct, date, ...)
-    raises instead of vanishing from the output."""
-    cols, bad = [], []
-    for name, dtype in sdf.dtypes:
-        if name in keys:
-            continue
-        base = dtype.split("(")[0]
-        if base in _SCALARS or base.startswith("timestamp") or base.startswith("decimal"):
-            cols.append(name)
-        else:
-            bad.append(f"{name} {dtype}")
-    if bad:
-        raise ValueError(
-            "keyed-state operator cannot carry these columns: " + ", ".join(bad)
-        )
-    return cols
-
-
-def _array_state_schema(sdf: DataFrame, cols: list[str]) -> StructType:
-    by_name = {f.name: f for f in sdf.schema.fields}
-    return StructType([StructField(c, ArrayType(by_name[c].dataType)) for c in cols])
+from flink_1_16_0_src_spark.streaming.keyed import (  # noqa: F401
+    _carry_cols,
+    _py,
+    array_state_operator,
+    json_state_operator,
+)
+from flink_1_16_0_src_spark.streaming.windows import _topk_merge
 
 
 def streaming_topn(
@@ -102,49 +83,24 @@ def streaming_topn(
 ) -> DataFrame:
     """Continuous per-key top-k (AppendOnly strategy): state holds the
     current top-k rows; every batch emits the refreshed top-k with
-    ``rank_num``. Run in update output mode. ``ttl_ms`` expires a
-    key's state on next access after the idle period — the same
-    visibility semantics as Flink's default StateTtlConfig
-    (OnReadAndWrite cleanup, flink-core/.../state/StateTtlConfig.java).
-    NB: Spark's ProcessingTimeTimeout (eager background eviction)
-    crashes Python workers in this build, so expiry is lazy-on-access;
-    at 100 TB cap total state via watermark-scoped operators where
+    ``rank_num``. Run in update output mode. Rows rank by ``order_col``
+    and then by the other carried columns, the same total order and
+    NULL placement as ``window_topn`` (windows._topk_merge): a NULL
+    order value ranks LAST under DESC and FIRST under ASC, Spark's
+    default null ordering. ``ttl_ms`` expires a key's state lazily on
+    next access after the idle period (keyed.array_state_operator). At
+    100 TB cap total state via watermark-scoped operators where
     possible."""
     carry = _carry_cols(sdf, partition_keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in partition_keys]
-    out_schema = StructType(
-        key_fields
-        + [f for f in sdf.schema.fields if f.name in carry]
-        + [StructField("rank_num", IntegerType())]
-    )
-    base_schema = _array_state_schema(sdf, carry)
-    state_schema = StructType(list(base_schema.fields) + [StructField("__updated", DoubleType())])
-    oi = carry.index(order_col)
+    by = [order_col] + [c for c in carry if c != order_col]
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        import time as _time
+    def step(prev, rows):
+        merged = rows if prev is None else pd.concat([prev, rows], ignore_index=True)
+        top = _topk_merge(merged, by, k, descending)
+        return top.assign(rank_num=range(1, len(top) + 1)), top
 
-        now = _time.time()
-        fresh = state.exists and (
-            ttl_ms is None or (now - state.get[-1]) * 1000.0 <= ttl_ms
-        )
-        cols = [list(x) for x in state.get[:-1]] if fresh else [[] for _ in carry]
-        rows = list(zip(*cols)) if cols and cols[0] else []
-        for pdf in pdfs:
-            rows.extend(tuple(t) for t in pdf[carry].itertuples(index=False))
-        rows.sort(key=lambda r: r[oi], reverse=descending)
-        rows = rows[:k]
-        state.update(
-            tuple([_py(r[i]) for r in rows] for i in range(len(carry))) + (now,)
-        )
-        out = pd.DataFrame(rows, columns=carry)
-        for kc, kv in zip(partition_keys, key):
-            out[kc] = kv
-        out["rank_num"] = range(1, len(rows) + 1)
-        yield out[[f.name for f in out_schema.fields]]
-
-    return sdf.groupBy(*partition_keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return array_state_operator(
+        sdf, partition_keys, step, [StructField("rank_num", IntegerType())], ttl_ms=ttl_ms
     )
 
 
@@ -155,97 +111,36 @@ def keep_last_dedup(
     update semantics). ``order_col`` breaks intra-batch order by that
     column (rowtime dedup); None keeps arrival order (proctime).
     ``ttl_ms`` expires state lazily on next access (StateTtlConfig
-    OnReadAndWrite semantics — see streaming_topn note)."""
-    carry = _carry_cols(sdf, keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(key_fields + [f for f in sdf.schema.fields if f.name in carry])
-    base_schema = _array_state_schema(sdf, carry)
-    state_schema = StructType(list(base_schema.fields) + [StructField("__updated", DoubleType())])
+    OnReadAndWrite semantics — see streaming_topn note). State is the
+    last row, one array per carried column."""
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        import time as _time
+    def step(prev, rows):
+        last = rows.sort_values(order_col, kind="stable") if order_col else rows
+        last = last.iloc[[-1]]
+        if prev is not None and order_col and not (
+            last[order_col].iloc[0] >= prev[order_col].iloc[0]
+        ):
+            last = prev
+        return last, last
 
-        now = _time.time()
-        fresh = state.exists and (
-            ttl_ms is None or (now - state.get[-1]) * 1000.0 <= ttl_ms
-        )
-        last = tuple(v[0] for v in state.get[:-1]) if fresh else None
-        for pdf in pdfs:
-            if len(pdf):
-                p = pdf.sort_values(order_col, kind="stable") if order_col else pdf
-                # per-column extraction: row-wise p[carry].iloc[-1] upcasts
-                # mixed numeric dtypes to float64, and a float written into
-                # an ArrayType(LongType) state column silently becomes NULL
-                cand = tuple(_py(p[c].iloc[-1]) for c in carry)
-                if last is None or order_col is None or cand[carry.index(order_col)] >= last[
-                    carry.index(order_col)
-                ]:
-                    last = cand
-        if last is not None:
-            state.update(tuple([_py(v)] for v in last) + (now,))
-            out = pd.DataFrame([last], columns=carry)
-            for kc, kv in zip(keys, key):
-                out[kc] = kv
-            yield out[[f.name for f in out_schema.fields]]
+    return array_state_operator(sdf, keys, step, ttl_ms=ttl_ms)
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
+
+def _over_aggs(value_col: str, prefix: str) -> list[tuple[str, str, str]]:
+    names = (("COUNT", "cnt"), ("SUM", "sum"), ("AVG", "avg"), ("MIN", "min"), ("MAX", "max"))
+    return [(fn, value_col, f"{prefix}_{alias}") for fn, alias in names]
 
 
 def streaming_over_unbounded(
     sdf: DataFrame, keys: list[str], order_col: str, value_col: str
 ) -> DataFrame:
     """Per-key running aggregates over UNBOUNDED PRECEDING (every input
-    row is emitted once, extended with running cnt/sum/avg/min/max).
-    Rows are processed in ``order_col`` order within a batch and in
-    arrival order across batches (same visible semantics as Flink's
-    proctime OVER; rowtime OVER exactness requires ordered input)."""
-    carry = _carry_cols(sdf, keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(
-        key_fields
-        + [f for f in sdf.schema.fields if f.name in carry]
-        + [
-            StructField("running_cnt", LongType()),
-            StructField("running_sum", DoubleType()),
-            StructField("running_avg", DoubleType()),
-            StructField("running_min", DoubleType()),
-            StructField("running_max", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("cnt", LongType()),
-            StructField("sum", DoubleType()),
-            StructField("min", DoubleType()),
-            StructField("max", DoubleType()),
-        ]
-    )
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        cnt, s, mn, mx = state.get if state.exists else (0, 0.0, None, None)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            p = pdf.sort_values(order_col, kind="stable").reset_index(drop=True)
-            v = p[value_col].astype(float)
-            p["running_cnt"] = v.notna().cumsum() + cnt
-            p["running_sum"] = v.fillna(0).cumsum() + s
-            p["running_avg"] = p["running_sum"] / p["running_cnt"]
-            run_min = v.cummin() if mn is None else v.cummin().combine(mn, min)
-            run_max = v.cummax() if mx is None else v.cummax().combine(mx, max)
-            p["running_min"], p["running_max"] = run_min, run_max
-            cnt, s = int(p["running_cnt"].iloc[-1]), float(p["running_sum"].iloc[-1])
-            mn, mx = float(run_min.iloc[-1]), float(run_max.iloc[-1])
-            for kc, kv in zip(keys, key):
-                p[kc] = kv
-            yield p[[f.name for f in out_schema.fields]]
-        state.update((cnt, s, mn, mx))
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    row is emitted once, extended with running cnt/sum/avg/min/max of
+    ``value_col``). Rows are processed in ``order_col`` order within a
+    batch and in arrival order across batches (same visible semantics
+    as Flink's proctime OVER; rowtime OVER exactness requires ordered
+    input). Runs as :func:`streaming_over_multi`."""
+    return streaming_over_multi(sdf, keys, order_col, _over_aggs(value_col, "running"))
 
 
 def streaming_over_bounded(
@@ -260,101 +155,13 @@ def streaming_over_bounded(
     RowTimeRowsBoundedPrecedingFunction (``rows=n`` → ROWS BETWEEN n-1
     PRECEDING AND CURRENT ROW) and RowTimeRangeBoundedPrecedingFunction
     (``range_interval='10 minutes'`` → RANGE BETWEEN interval PRECEDING
-    AND CURRENT ROW). State carries only the tail that can still enter
-    a future row's frame (last n rows / rows within the interval of the
-    newest timestamp) — bounded, exactly like the reference's cleanup
-    timers. Aggregation itself is pandas rolling (vectorized)."""
+    AND CURRENT ROW), with bounded cnt/sum/avg/min/max of
+    ``value_col``. Runs as :func:`streaming_over_multi`, whose state
+    carries only the tail that can still enter a future row's frame."""
     assert (rows is None) != (range_interval is None), "pass exactly one frame bound"
-    carry = _carry_cols(sdf, keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(
-        key_fields
-        + [f for f in sdf.schema.fields if f.name in carry]
-        + [
-            StructField("bounded_cnt", LongType()),
-            StructField("bounded_sum", DoubleType()),
-            StructField("bounded_avg", DoubleType()),
-            StructField("bounded_min", DoubleType()),
-            StructField("bounded_max", DoubleType()),
-        ]
-    )
-    from pyspark.sql.types import ArrayType, StringType
-
-    state_schema = StructType(
-        [
-            StructField("tail_v", ArrayType(DoubleType())),
-            StructField("tail_t", ArrayType(StringType())),
-        ]
-    )
-    delta = pd.Timedelta(range_interval) if range_interval else None
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        tail_v, tail_t = (list(state.get[0]), list(state.get[1])) if state.exists else ([], [])
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            p = pdf.sort_values(order_col, kind="stable").reset_index(drop=True)
-            ncarry = len(tail_v)
-            v = pd.concat(
-                [pd.Series(tail_v, dtype=float), p[value_col].astype(float)],
-                ignore_index=True,
-            )
-            t = pd.concat(
-                [pd.Series(pd.to_datetime(tail_t)), pd.to_datetime(p[order_col])],
-                ignore_index=True,
-            )
-            # a late row (batch time < tail max) makes the concat
-            # non-monotonic — time-based rolling would raise and ROWS
-            # frames would mis-order; sort tail+batch JOINTLY (stable:
-            # earlier-arrived rows precede on ties) and map results
-            # back to batch positions. The reference reorders the same
-            # way via MapState + event-time timers; rows older than
-            # the retained tail horizon see a truncated frame (state
-            # already cleaned, matching its watermark cleanup).
-            order = np.argsort(t.to_numpy(), kind="stable")
-            batch_pos = np.arange(ncarry, len(order))
-            if not np.array_equal(order, np.arange(len(order))):
-                inv = np.empty(len(order), dtype=np.int64)
-                inv[order] = np.arange(len(order))
-                batch_pos = inv[ncarry:]
-                v = v.iloc[order].reset_index(drop=True)
-                t = t.iloc[order].reset_index(drop=True)
-            if rows is not None:
-                r = v.rolling(rows, min_periods=1)
-            else:
-                # closed="both": Flink's RANGE x PRECEDING frame is
-                # [cur - x, cur] INCLUSIVE on both ends
-                # (RowTimeRangeBoundedPrecedingFunction retracts rows
-                # strictly older than cur - x; SQL RANGE is inclusive)
-                # — pandas' default right-closed window would drop the
-                # row sitting exactly x before the current one
-                r = pd.DataFrame({"v": v.values}, index=pd.DatetimeIndex(t))["v"].rolling(
-                    delta, min_periods=1, closed="both"
-                )
-            agg = {
-                "bounded_cnt": r.count().astype("int64"),
-                "bounded_sum": r.sum(),
-                "bounded_avg": r.mean(),
-                "bounded_min": r.min(),
-                "bounded_max": r.max(),
-            }
-            for name, series in agg.items():
-                p[name] = series.to_numpy()[batch_pos]
-            for kc, kv in zip(keys, key):
-                p[kc] = kv
-            yield p[[f.name for f in out_schema.fields]]
-            # retain only the tail a future frame can reference
-            if rows is not None:
-                keep = min(len(v), rows - 1)
-            else:
-                cutoff = t.iloc[-1] - delta
-                keep = int((t >= cutoff).sum())
-            tail_v = [float(x) for x in v.iloc[len(v) - keep :]] if keep else []
-            tail_t = [str(x) for x in t.iloc[len(t) - keep :]] if keep else []
-        state.update((tail_v, tail_t))
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return streaming_over_multi(
+        sdf, keys, order_col, _over_aggs(value_col, "bounded"),
+        rows=rows, range_interval=range_interval,
     )
 
 
@@ -363,51 +170,40 @@ def changelog_normalize(
 ) -> DataFrame:
     """Collapse an upsert stream into an explicit changelog: first value
     per key → ``+I``; change → ``-U`` (old) then ``+U`` (new); a row
-    with ``delete_col`` true → ``-D``. The ``__rowkind`` column is the
-    Spark-visible stand-in for Flink's RowKind byte
-    (flink-core/.../types/RowKind.java:31-52)."""
+    with ``delete_col`` true → ``-D``, which also drops the key's state,
+    so the key's next row is a ``+I`` again. The ``__rowkind`` column is
+    the Spark-visible stand-in for Flink's RowKind byte
+    (flink-core/.../types/RowKind.java:31-52). State is the last row,
+    one array per carried column."""
     carry = [c for c in _carry_cols(sdf, keys) if c != delete_col]
     # the order column sequences updates but is NOT part of the value —
     # two versions differing only in order_col are the same row
     cmp_idx = [i for i, c in enumerate(carry) if c != order_col]
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(
-        key_fields
-        + [f for f in sdf.schema.fields if f.name in carry]
-        + [StructField("__rowkind", StringType())]
-    )
-    state_schema = _array_state_schema(sdf, carry)
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        last = tuple(v[0] for v in state.get) if state.exists else None
+    def step(prev, rows):
+        last = next(prev.itertuples(index=False, name=None)) if prev is not None else None
         cmp = lambda t: tuple(t[i] for i in cmp_idx)  # noqa: E731
         out_rows = []
-        for pdf in pdfs:
-            p = pdf.sort_values(order_col, kind="stable") if order_col else pdf
-            for d in p.to_dict("records"):
-                vals = tuple(d[c] for c in carry)
-                if delete_col and d.get(delete_col):
-                    if last is not None:
-                        out_rows.append(last + ("-D",))
-                        last = None
-                    continue
-                if last is None:
-                    out_rows.append(vals + ("+I",))
-                elif cmp(vals) != cmp(last):
-                    out_rows.append(last + ("-U",))
-                    out_rows.append(vals + ("+U",))
-                last = vals
-        if last is not None:
-            state.update(tuple([_py(v)] for v in last))
+        p = rows.sort_values(order_col, kind="stable") if order_col else rows
+        for d in p.to_dict("records"):
+            vals = tuple(d[c] for c in carry)
+            if delete_col and d.get(delete_col):
+                if last is not None:
+                    out_rows.append(last + ("-D",))
+                    last = None
+                continue
+            if last is None:
+                out_rows.append(vals + ("+I",))
+            elif cmp(vals) != cmp(last):
+                out_rows.append(last + ("-U",))
+                out_rows.append(vals + ("+U",))
+            last = vals
         out = pd.DataFrame(out_rows, columns=carry + ["__rowkind"])
-        for kc, kv in zip(keys, key):
-            out[kc] = kv
-        yield out[[f.name for f in out_schema.fields]] if len(out) else pd.DataFrame(
-            columns=[f.name for f in out_schema.fields]
-        )
+        return out, None if last is None else pd.DataFrame([last], columns=carry)
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return array_state_operator(
+        sdf, keys, step, [StructField("__rowkind", StringType())], "append",
+        uncarried=(delete_col,),
     )
 
 
@@ -421,16 +217,19 @@ def streaming_asof_join(
 ) -> DataFrame:
     """FOR SYSTEM_TIME AS OF: each left row joins the latest right
     version with ``right_ts <= left_ts``. Both streams are tagged,
-    unioned, and keyed; state keeps the right side's (ts, payload)
-    versions sorted (payload JSON-encoded — versions are few per key).
-    Left rows that precede every version emit null payload columns.
+    unioned, and keyed; the JSON state document keeps the right side's
+    versions as two lists, epoch seconds and payload JSON, sorted by
+    time (versions are few per key). Left rows that precede every
+    version emit null payload columns.
 
     Timestamp payload columns are carried as unix MICROS through the
     JSON state (to_json's ISO text keeps only milliseconds) and
     restored on the way out, so event-time values round-trip exactly;
     the ``__ts`` ordering column likewise compares in micros on both
     sides (TemporalRowTimeJoinOperator.java orders raw epoch longs)."""
-    from pyspark.sql.types import LongType, TimestampType
+    import bisect
+
+    from pyspark.sql.types import TimestampType
 
     lcols = [c for c in left.columns if c != key]
     l_conv = [c for c in lcols if isinstance(left.schema[c].dataType, TimestampType)]
@@ -438,30 +237,20 @@ def streaming_asof_join(
         c for c in right_vals if isinstance(right.schema[c].dataType, TimestampType)
     ]
 
-    def _ts_expr(df: DataFrame, col: str):
+    def micros(df: DataFrame, col: str):
         if isinstance(df.schema[col].dataType, TimestampType):
             return F.unix_micros(F.col(col))
         return F.col(col)
 
-    def _payload_cols(cols, conv):
-        return [
-            (F.unix_micros(F.col(c)).alias(c) if c in conv else F.col(c))
-            for c in cols
-        ]
+    def tag(df: DataFrame, side: int, ts_col: str, cols: list[str]) -> DataFrame:
+        return df.select(
+            F.col(key).alias("__k"),
+            F.lit(side).alias("__side"),
+            micros(df, ts_col).alias("__ts"),
+            F.to_json(F.struct(*[micros(df, c).alias(c) for c in cols])).alias("__payload"),
+        )
 
-    tagged_l = left.select(
-        F.col(key).alias("__k"),
-        F.lit(0).alias("__side"),
-        _ts_expr(left, left_ts).alias("__ts"),
-        F.to_json(F.struct(*_payload_cols(lcols, l_conv))).alias("__payload"),
-    )
-    tagged_r = right.select(
-        F.col(key).alias("__k"),
-        F.lit(1).alias("__side"),
-        _ts_expr(right, right_ts).alias("__ts"),
-        F.to_json(F.struct(*_payload_cols(right_vals, r_conv))).alias("__payload"),
-    )
-    both = tagged_l.unionByName(tagged_r)
+    both = tag(left, 0, left_ts, lcols).unionByName(tag(right, 1, right_ts, right_vals))
 
     def _long_if_conv(f):
         if f.name in l_conv or f.name in r_conv:
@@ -474,45 +263,31 @@ def streaming_asof_join(
     ]
     key_field = [f for f in left.schema.fields if f.name == key]
     out_schema = StructType(key_field + left_fields + right_fields)
-    state_schema = StructType(
-        [StructField("ts", ArrayType(DoubleType())), StructField("payload", ArrayType(StringType()))]
-    )
 
-    def fn(k, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        ts, payloads = ([list(x) for x in state.get] if state.exists else ([], []))
+    def epoch(v) -> float:
+        # canonical rows carry a non-micros timestamp as its str() form
+        return float(v) if isinstance(v, (int, float)) else pd.Timestamp(v).timestamp()
+
+    def step(k, rows, doc):
+        ts, payloads = doc or ([], [])
         lrows = []
-        for pdf in pdfs:
-            # NOT itertuples: it mangles the __-prefixed column names
-            for d in pdf.to_dict("records"):
-                epoch = d["__ts"].timestamp() if hasattr(d["__ts"], "timestamp") else float(d["__ts"])
-                if d["__side"] == 1:
-                    ts.append(epoch)
-                    payloads.append(d["__payload"])
-                else:
-                    lrows.append((epoch, d["__payload"]))
+        for d in rows:
+            if d["__side"] == 1:
+                ts.append(epoch(d["__ts"]))
+                payloads.append(d["__payload"])
+            else:
+                lrows.append((epoch(d["__ts"]), d["__payload"]))
         order = sorted(range(len(ts)), key=lambda i: ts[i])
         ts = [ts[i] for i in order]
         payloads = [payloads[i] for i in order]
-        state.update((ts, payloads))
-
-        import bisect
-
         out = []
-        for epoch, lp in sorted(lrows):
-            i = bisect.bisect_right(ts, epoch) - 1
-            lrec = json.loads(lp)
+        for t, lp in sorted(lrows):
+            i = bisect.bisect_right(ts, t) - 1
             rrec = json.loads(payloads[i]) if i >= 0 else {c: None for c in right_vals}
-            out.append({key: k[0], **lrec, **rrec})
-        cols = [f.name for f in out_schema.fields]
-        df = pd.DataFrame(out, columns=cols)
-        for f in left_fields:
-            if "timestamp" in f.dataType.simpleString():
-                df[f.name] = pd.to_datetime(df[f.name])
-        yield df
+            out.append({key: k[0], **json.loads(lp), **rrec})
+        return out, [ts, payloads]
 
-    res = both.groupBy("__k").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    res = json_state_operator(both, ["__k"], step, out_schema)
     for c in l_conv + r_conv:
         res = res.withColumn(c, F.timestamp_micros(F.col(c)))
     return res
@@ -577,17 +352,12 @@ def keyed_inactivity_timer(
     is the micro-batch boundary (documented skew, SURVEY §7.3 risk 3).
     Scale: state is (last_seen, count) per key — O(1); one shuffle on
     the key columns."""
-    import re as _re
-
-    m = _re.match(r"(\d+)\s*(ms|milliseconds?|s|seconds?|m|minutes?|h|hours?)$", timeout.strip())
-    if not m:
+    try:
+        timeout_ms = pd.Timedelta(timeout) // pd.Timedelta(milliseconds=1)
+    except (TypeError, ValueError):
+        timeout_ms = None
+    if not isinstance(timeout_ms, int) or timeout_ms <= 0:
         raise ValueError(f"unsupported timeout literal: {timeout!r}")
-    u = m.group(2)
-    if u in ("ms",) or u.startswith("milli"):
-        unit_ms = 1
-    else:
-        unit_ms = {"s": 1000, "m": 60000, "h": 3600000}[u[0]]
-    timeout_ms = int(m.group(1)) * unit_ms
 
     key_fields = [f for f in sdf.schema.fields if f.name in keys]
     out_schema = StructType(
@@ -690,6 +460,9 @@ def changelog_group_aggregate(
     )
 
 
+_ROLLING = {"COUNT": "count", "SUM": "sum", "AVG": "mean", "MIN": "min", "MAX": "max"}
+
+
 def streaming_over_multi(
     sdf: DataFrame,
     keys: list[str],
@@ -713,7 +486,11 @@ def streaming_over_multi(
     emits each row on arrival, so it cannot either), FIRST_VALUE /
     LAST_VALUE skip NULLs like the reference's agg functions. At most
     one frame of ``rows`` (ROWS n total) / ``range_interval`` (RANGE
-    preceding, inclusive edge) / neither (UNBOUNDED PRECEDING).
+    preceding, inclusive edge) / neither (UNBOUNDED PRECEDING). The
+    aggregates skip NULL values, as in SQL: a frame without values
+    has COUNT 0 and NULL SUM/AVG/MIN/MAX. ``streaming_over_unbounded``
+    and ``streaming_over_bounded`` are this operator with the five
+    aggregates on one column.
 
     State: UNBOUNDED keeps per-column running accumulators
     (cnt/sum/min/max/first/last arrays indexed by referenced column)
@@ -758,8 +535,6 @@ def streaming_over_multi(
             for fn, _c, al, _off in aggs
         ]
     )
-    from pyspark.sql.types import ArrayType, StringType
-
     bounded = rows is not None or range_interval is not None
     if bounded:
         state_schema = StructType([StructField("tail", ArrayType(StringType()))])
@@ -806,8 +581,14 @@ def streaming_over_multi(
                     )
                     for i, c in enumerate(val_cols)
                 }
-                # joint tail+batch sort for late rows — see
-                # streaming_over_bounded (same MapState-reorder parity)
+                # a late row (batch time < tail max) makes the concat
+                # non-monotonic — time-based rolling would raise and ROWS
+                # frames would mis-order; sort tail+batch JOINTLY (stable:
+                # earlier-arrived rows precede on ties) and map results
+                # back to batch positions. The reference reorders the same
+                # way via MapState + event-time timers; rows older than
+                # the retained tail horizon see a truncated frame (state
+                # already cleaned, matching its watermark cleanup).
                 order = np.argsort(t.to_numpy(), kind="stable")
                 batch_pos = np.arange(ncarry, len(order))
                 if not np.array_equal(order, np.arange(len(order))):
@@ -824,25 +605,20 @@ def streaming_over_multi(
                 def roll(series):
                     if rows is not None:
                         return series.rolling(rows, min_periods=1)
-                    # inclusive preceding edge — see streaming_over_bounded
+                    # closed="both": Flink's RANGE x PRECEDING frame is
+                    # [cur - x, cur] INCLUSIVE on both ends
+                    # (RowTimeRangeBoundedPrecedingFunction retracts rows
+                    # strictly older than cur - x; SQL RANGE is inclusive)
+                    # — pandas' default right-closed window would drop the
+                    # row sitting exactly x before the current one
                     return pd.DataFrame(
                         {"v": series.values}, index=pd.DatetimeIndex(t)
                     )["v"].rolling(delta, min_periods=1, closed="both")
 
                 for fn_name, c, al, _off in aggs:
-                    s = ones if c is None else vals[c]
-                    r = roll(s)
-                    if fn_name == "COUNT":
-                        out = r.count().astype("int64")
-                    elif fn_name == "SUM":
-                        out = r.sum()
-                    elif fn_name == "AVG":
-                        out = r.mean()
-                    elif fn_name == "MIN":
-                        out = r.min()
-                    else:
-                        out = r.max()
-                    p[al] = out.to_numpy()[batch_pos]
+                    r = roll(ones if c is None else vals[c])
+                    out = getattr(r, _ROLLING[fn_name])().to_numpy()[batch_pos]
+                    p[al] = out.astype("int64") if fn_name == "COUNT" else out
                 for kc, kv in zip(keys, key):
                     p[kc] = kv
                 yield p[[f.name for f in out_schema.fields]]
@@ -860,18 +636,13 @@ def streaming_over_multi(
         # UNBOUNDED PRECEDING: running accumulators per referenced col
         k = len(val_cols)
         if state.exists:
-            rows_seen, cnt, s_, mn, mx, first, last, lag_json = state.get
-            cnt, s_, mn, mx = list(cnt), list(s_), list(mn), list(mx)
-            first, last = list(first), list(last)
-            lag_tails = {
-                c: json.loads(lag_json[i]) for i, c in enumerate(val_cols)
-            } if lag_json else {c: [] for c in val_cols}
+            rows_seen, *accs, lag_json = state.get
+            cnt, s_, mn, mx, first, last = map(list, accs)
+            lag_tails = dict(zip(val_cols, map(json.loads, lag_json)))
         else:
-            rows_seen = 0
+            rows_seen, lag_tails = 0, {c: [] for c in val_cols}
             cnt, s_ = [0] * k, [0.0] * k
-            mn, mx = [None] * k, [None] * k
-            first, last = [None] * k, [None] * k
-            lag_tails = {c: [] for c in val_cols}
+            mn, mx, first, last = ([None] * k for _ in range(4))
         for pdf in pdfs:
             if not len(pdf):
                 continue
@@ -881,9 +652,13 @@ def streaming_over_multi(
             for i, c in enumerate(val_cols):
                 v = p[c].astype(float)
                 rc = v.notna().cumsum() + cnt[i]
-                rs = v.fillna(0).cumsum() + s_[i]
-                rmn = v.cummin() if mn[i] is None else v.cummin().combine(mn[i], min)
-                rmx = v.cummax() if mx[i] is None else v.cummax().combine(mx[i], max)
+                acc = v.fillna(0).cumsum() + s_[i]
+                # NULLs are skipped: a NULL row reports the running
+                # MIN/MAX so far, and SUM is NULL until a value arrives
+                rs = acc.where(rc > 0)
+                rmn, rmx = v.cummin().ffill(), v.cummax().ffill()
+                if mn[i] is not None:
+                    rmn, rmx = np.fmin(rmn, mn[i]), np.fmax(rmx, mx[i])
                 # FIRST_VALUE / LAST_VALUE navigation (NULLs skipped —
                 # FirstValueAggFunction / LastValueAggFunction parity)
                 if first[i] is not None:
@@ -909,35 +684,24 @@ def streaming_over_multi(
                         None if pd.isna(x) else float(x)
                         for x in s2.iloc[max(0, len(s2) - lag_depth):]
                     ]
-                run[c] = (rc, rs, rmn, rmx, fv, lv)
-                cnt[i], s_[i] = int(rc.iloc[-1]), float(rs.iloc[-1])
+                run[c] = {
+                    "COUNT": rc, "SUM": rs, "AVG": rs / rc, "MIN": rmn,
+                    "MAX": rmx, "FIRST_VALUE": fv, "LAST_VALUE": lv,
+                }
+                cnt[i], s_[i] = int(rc.iloc[-1]), float(acc.iloc[-1])
                 mn[i], mx[i] = float(rmn.iloc[-1]), float(rmx.iloc[-1])
             star = pd.Series(range(1, len(p) + 1)) + rows_seen
             rows_seen += len(p)
             for fn_name, c, al, off in aggs:
                 if c is None:
                     p[al] = star.astype("int64")
-                    continue
-                rc, rs, rmn, rmx, fv, lv = run[c]
-                if fn_name == "COUNT":
-                    p[al] = rc.astype("int64")
-                elif fn_name == "SUM":
-                    p[al] = rs
-                elif fn_name == "AVG":
-                    p[al] = rs / rc
-                elif fn_name == "MIN":
-                    p[al] = rmn
-                elif fn_name == "MAX":
-                    p[al] = rmx
                 elif fn_name == "LAG":
                     s2, npfx = lag_map[c]
                     p[al] = s2.shift(off or 1).to_numpy()[npfx:]
                 elif fn_name == "LEAD":  # offset 0 = current row value
                     p[al] = p[c].astype(float).to_numpy()
-                elif fn_name == "FIRST_VALUE":
-                    p[al] = fv.to_numpy()
-                else:  # LAST_VALUE
-                    p[al] = lv.to_numpy()
+                else:
+                    p[al] = run[c][fn_name].to_numpy()
             for kc, kv in zip(keys, key):
                 p[kc] = kv
             yield p[[f.name for f in out_schema.fields]]

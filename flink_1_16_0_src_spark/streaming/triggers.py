@@ -16,10 +16,11 @@ persists, so custom triggers carry state exactly like Flink's
 ReducingState-backed ones.
 
 Spark mapping: Structured Streaming's built-in windowed aggregation
-exposes no trigger hook, so the runner is an ``applyInPandasWithState``
-operator (the same execution strategy as the repo's CEP / Top-N /
-count-window operators): state = open windows' buffered rows + each
-window's trigger-state dict + the carried per-key watermark
+exposes no trigger hook, so the runner is a Python keyed-state operator
+(keyed.json_state_operator, the same skeleton as the repo's CEP and
+count-window operators): the per-key JSON state document holds the open
+windows' buffered rows + each window's trigger-state dict + the carried
+per-key watermark
 (bounded-out-of-orderness, max ts − delay — Flink's
 BoundedOutOfOrdernessWatermarks, evaluated at micro-batch granularity;
 the documented timer skew of SURVEY §7.3 risk 3). Early FIREs emit
@@ -31,15 +32,16 @@ window end), each holding at most its own rows (less after PURGE).
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 from enum import Enum
-from typing import Callable, Iterable
+from typing import Callable
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from flink_1_16_0_src_spark.streaming.keyed import json_state_operator
 
 
 class TriggerResult(Enum):
@@ -226,19 +228,14 @@ def triggered_tumble_window(
     ``order_col`` sorts each
     batch before processing so on_element order (and therefore count /
     delta trigger firings) is arrival-independent within a batch."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import StringType, StructField
-
     if isinstance(output_schema, str):
         output_schema = StructType.fromDDL(output_schema)
-    state_schema = StructType([StructField("st", StringType())])
     size_td = pd.Timedelta(size)
     delay_td = pd.Timedelta(delay)
     late_td = pd.Timedelta(allowed_lateness)
-    cols = [f.name for f in output_schema.fields]
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        st = json.loads(state.get[0]) if state.exists else {"wm": None, "w": {}}
+    def step(key, rows, st):
+        st = st or {"wm": None, "w": {}}
         wm = pd.Timestamp(st["wm"]) if st["wm"] is not None else None
         windows: dict = st["w"]  # start_iso -> {"rows": [...], "ts": {...}}
         out: list[dict] = []
@@ -261,32 +258,28 @@ def triggered_tumble_window(
                 wslot["rows"] = []
 
         max_ts = wm
-        for pdf in pdfs:
-            sort_by = order_col if order_col is not None else ts_col
-            pdf = pdf.sort_values(sort_by, kind="stable")
-            for d in pdf.to_dict("records"):
-                d = json.loads(json.dumps(d, default=str))
-                ts = pd.Timestamp(d[ts_col])
-                start = pd.Timestamp((ts.value // size_td.value) * size_td.value)
-                window = Window(start, start + size_td)
-                # WindowOperator.java:590 isWindowLate — drop only when
-                # the element's WINDOW is expired (end + allowedLateness
-                # ≤ watermark), not whenever the element itself is
-                # behind the watermark: a behind-watermark row whose
-                # window is still open (or within lateness) joins the
-                # pane, as in Flink.
-                if wm is not None and window.end + late_td <= wm:
-                    continue  # late: window already expired
-                slot = windows.setdefault(
-                    start.isoformat(), {"rows": [], "ts": {}}
-                )
-                slot["rows"].append(d)
-                # expose the current watermark to on_element (the
-                # TriggerContext.getCurrentWatermark analog) so
-                # EventTimeTrigger's late-firing branch can fire
-                slot["ts"]["__watermark"] = wm.isoformat() if wm is not None else None
-                apply(trigger.on_element(d, window, slot["ts"]), slot, window)
-                max_ts = ts if max_ts is None or ts > max_ts else max_ts
+        for d in rows:
+            ts = pd.Timestamp(d[ts_col])
+            start = pd.Timestamp((ts.value // size_td.value) * size_td.value)
+            window = Window(start, start + size_td)
+            # WindowOperator.java:590 isWindowLate — drop only when
+            # the element's WINDOW is expired (end + allowedLateness
+            # ≤ watermark), not whenever the element itself is
+            # behind the watermark: a behind-watermark row whose
+            # window is still open (or within lateness) joins the
+            # pane, as in Flink.
+            if wm is not None and window.end + late_td <= wm:
+                continue  # late: window already expired
+            slot = windows.setdefault(
+                start.isoformat(), {"rows": [], "ts": {}}
+            )
+            slot["rows"].append(d)
+            # expose the current watermark to on_element (the
+            # TriggerContext.getCurrentWatermark analog) so
+            # EventTimeTrigger's late-firing branch can fire
+            slot["ts"]["__watermark"] = wm.isoformat() if wm is not None else None
+            apply(trigger.on_element(d, window, slot["ts"]), slot, window)
+            max_ts = ts if max_ts is None or ts > max_ts else max_ts
         if max_ts is not None:
             new_wm = max_ts - delay_td
             wm = new_wm if wm is None or new_wm > wm else wm
@@ -328,14 +321,9 @@ def triggered_tumble_window(
                     # the trigger already fired at close, Flink's
                     # clearAllState fires nothing further here
                     windows.pop(siso)
-        state.update((json.dumps({"wm": wm.isoformat() if wm is not None else None,
-                                  "w": windows}),))
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        return out, {"wm": wm.isoformat() if wm is not None else None, "w": windows}
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return json_state_operator(
+        sdf, keys, step, output_schema,
+        sort_by=order_col if order_col is not None else ts_col,
     )

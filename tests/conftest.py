@@ -66,6 +66,7 @@ _SLOW_TESTS = {
     "test_changelog_group_aggregate_null_measure",
     "test_changelog_group_aggregate_retracts_across_batches",
     "test_changelog_normalize",
+    "test_changelog_normalize_delete_clears_state_across_batches",
     "test_keep_first_dedup_cross_batch",
     "test_keep_first_dedup_proctime_no_reemit",
     "test_keep_first_dedup_edge_inputs",
@@ -76,8 +77,10 @@ _SLOW_TESTS = {
     "test_streaming_over_bounded_rows_matches_batch",
     "test_streaming_over_multi_cross_batch_tail",
     "test_streaming_over_multi_offset_value_aggs",
+    "test_streaming_over_late_rows_and_null",
     "test_streaming_over_unbounded_matches_batch",
     "test_streaming_topn_across_batches",
+    "test_streaming_topn_null_order_values",
     "test_streaming_topn_matches_batch",
     "test_streaming_topn_no_ttl_keeps_state",
     "test_streaming_topn_ttl_expiry",

@@ -654,3 +654,181 @@ def test_streaming_over_multi_offset_value_aggs(spark, tmp_path):
         stateful.streaming_over_multi(
             sdf, ["k"], "ts", [("LAG", "v", "prev", 1)], rows=3
         )
+
+
+def _over_guard_stream(spark, tmp_path):
+    """Three micro-batches for key ``a``: batch 2 and 3 each hold a row
+    behind the maximum ts already seen (10:03 after 10:04, 10:01 after
+    10:05), and 10:05 has a NULL value. Key ``b`` starts with a NULL, so
+    its first frame holds no value at all."""
+    import datetime as dt
+
+    t = lambda m: dt.datetime(2024, 1, 1, 10, m)  # noqa: E731
+    schema = "k string, ts timestamp, v double"
+    batches = [
+        [("a", t(0), 1.0), ("a", t(2), 2.0), ("a", t(4), 4.0), ("b", t(0), None)],
+        [("a", t(3), 8.0), ("a", t(5), None), ("b", t(1), 5.0)],
+        [("a", t(1), 16.0), ("a", t(6), 32.0)],
+    ]
+    return scripted_stream(
+        spark, [spark.createDataFrame(b, schema) for b in batches], tmp_path
+    )
+
+
+# (k, minute, cnt, sum, avg, min, max) per input row, worked by hand.
+# Bounded frames sort the retained tail and the batch jointly, so a late
+# row sees the tail rows before it; rows older than the tail see a
+# truncated frame. ROWS 2 keeps one tail row. RANGE 2 minutes is
+# inclusive at both ends ([ts - 2 min, ts]). UNBOUNDED accumulates in
+# arrival order across batches, ``ts`` order within a batch. NULL values
+# are skipped; a frame without values has count 0 and NULL sum/avg/min/max.
+_OVER_GUARD_EXPECTED = {
+    "rows": [
+        ("a", 0, 1, 1.0, 1.0, 1.0, 1.0),
+        ("a", 1, 1, 16.0, 16.0, 16.0, 16.0),
+        ("a", 2, 2, 3.0, 1.5, 1.0, 2.0),
+        ("a", 3, 1, 8.0, 8.0, 8.0, 8.0),
+        ("a", 4, 2, 6.0, 3.0, 2.0, 4.0),
+        ("a", 5, 1, 4.0, 4.0, 4.0, 4.0),
+        ("a", 6, 1, 32.0, 32.0, 32.0, 32.0),
+        ("b", 0, 0, None, None, None, None),
+        ("b", 1, 1, 5.0, 5.0, 5.0, 5.0),
+    ],
+    "range": [
+        ("a", 0, 1, 1.0, 1.0, 1.0, 1.0),
+        ("a", 1, 1, 16.0, 16.0, 16.0, 16.0),
+        ("a", 2, 2, 3.0, 1.5, 1.0, 2.0),
+        ("a", 3, 2, 10.0, 5.0, 2.0, 8.0),
+        ("a", 4, 2, 6.0, 3.0, 2.0, 4.0),
+        ("a", 5, 2, 12.0, 6.0, 4.0, 8.0),
+        ("a", 6, 2, 36.0, 18.0, 4.0, 32.0),
+        ("b", 0, 0, None, None, None, None),
+        ("b", 1, 1, 5.0, 5.0, 5.0, 5.0),
+    ],
+    "unbounded": [
+        ("a", 0, 1, 1.0, 1.0, 1.0, 1.0),
+        ("a", 1, 5, 31.0, 6.2, 1.0, 16.0),
+        ("a", 2, 2, 3.0, 1.5, 1.0, 2.0),
+        ("a", 3, 4, 15.0, 3.75, 1.0, 8.0),
+        ("a", 4, 3, 7.0, 2.333333, 1.0, 4.0),
+        ("a", 5, 4, 15.0, 3.75, 1.0, 8.0),
+        ("a", 6, 6, 63.0, 10.5, 1.0, 32.0),
+        ("b", 0, 0, None, None, None, None),
+        ("b", 1, 1, 5.0, 5.0, 5.0, 5.0),
+    ],
+}
+
+
+@pytest.mark.parametrize("frame", ["rows", "range", "unbounded"])
+def test_streaming_over_late_rows_and_null(spark, tmp_path, frame):
+    """streaming_over_bounded (ROWS 2, RANGE 2 minutes) and
+    streaming_over_unbounded over a three-batch stream with late rows
+    and NULL values, against hand-worked frames."""
+    sdf = _over_guard_stream(spark, tmp_path)
+    if frame == "unbounded":
+        out, p = stateful.streaming_over_unbounded(sdf, ["k"], "ts", "v"), "running"
+    else:
+        bound = {"rows": 2} if frame == "rows" else {"range_interval": "2 minutes"}
+        out, p = stateful.streaming_over_bounded(sdf, ["k"], "ts", "v", **bound), "bounded"
+    aggs = [f"{p}_{a}" for a in ("cnt", "sum", "avg", "min", "max")]
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("k", "string"), ("ts", "timestamp"), ("v", "double"),
+        (aggs[0], "bigint"), *[(a, "double") for a in aggs[1:]],
+    ]
+    got = sorted(
+        (r.k, r.ts.minute, r[aggs[0]],
+         *[None if r[a] is None else round(r[a], 6) for a in aggs[1:]])
+        for r in sources.run_to_memory(out, f"t_over_guard_{frame}", "append").collect()
+    )
+    assert got == _OVER_GUARD_EXPECTED[frame]
+
+
+@pytest.mark.parametrize(
+    "otype,descending",
+    [("double", True), ("double", False), ("string", True), ("string", False)],
+)
+def test_streaming_topn_null_order_values(spark, tmp_path, otype, descending):
+    """streaming_topn ranks a NULL order value like batch row_number()
+    with Spark's default null ordering (LAST under DESC, FIRST under
+    ASC), in a batch and across batches, and breaks order ties on the
+    payload columns. Key 1 holds values [5, NULL, 3, 1, 4]; key 2 holds
+    a three-way tie on 2 next to a 7."""
+    conv = (lambda v: v) if otype == "double" else (lambda v: None if v is None else f"v{v}")
+    schema = f"k bigint, o {otype}, p string"
+    b1 = [(1, 5, "a"), (1, None, "b"), (1, 3, "c"), (2, 2, "x"), (2, 7, "y")]
+    b2 = [(1, 1, "d"), (1, 4, "e"), (2, 2, "z"), (2, 2, "w")]
+    frames = [
+        spark.createDataFrame([(k, conv(None if o is None else float(o)), p)
+                               for k, o, p in b], schema)
+        for b in (b1, b2)
+    ]
+    sdf = scripted_stream(spark, frames, tmp_path)
+    out = stateful.streaming_topn(sdf, ["k"], "o", 2, descending=descending)
+
+    emitted: dict = {}
+
+    def sink(df, batch_id):
+        emitted[batch_id] = sorted(tuple(r) for r in df.select("k", "rank_num", "o", "p").collect())
+
+    q = out.writeStream.foreachBatch(sink).outputMode("update").trigger(availableNow=True).start()
+    q.awaitTermination()
+    assert sorted(emitted) == [0, 1]
+
+    def expected(df):
+        d = F.col("o").desc() if descending else F.col("o").asc()
+        p = F.col("p").desc() if descending else F.col("p").asc()
+        w = Window.partitionBy("k").orderBy(d, p)
+        return sorted(
+            tuple(r)
+            for r in df.withColumn("rank_num", F.row_number().over(w))
+            .where(F.col("rank_num") <= 2)
+            .select("k", "rank_num", "o", "p")
+            .collect()
+        )
+
+    assert emitted[0] == expected(frames[0])
+    assert emitted[1] == expected(frames[0].unionByName(frames[1]))
+    top1 = [r for r in emitted[1] if r[0] == 1]
+    if descending:  # 5 then 4; the NULL ranks last
+        assert [r[2] for r in top1] == [conv(5.0), conv(4.0)]
+    else:  # the NULL ranks first, then 1
+        assert [r[2] for r in top1] == [None, conv(1.0)]
+
+
+@pytest.mark.parametrize("timeout", ["soon", "", "0 seconds", "-5 seconds", "10 parsecs"])
+def test_keyed_inactivity_timer_rejects_bad_timeout(spark, timeout):
+    """An unparseable or non-positive timeout raises when the operator
+    is built, before any drain."""
+    df = spark.createDataFrame([("A", 1.0)], "k string, v double").withColumn(
+        "ts", F.current_timestamp()
+    )
+    with pytest.raises(ValueError, match="unsupported timeout literal"):
+        stateful.keyed_inactivity_timer(df, ["k"], "ts", timeout)
+
+
+def test_changelog_normalize_delete_clears_state_across_batches(spark, tmp_path):
+    """A -D drops the key's state: a key inserted in batch 1 and
+    deleted in batch 2 starts over with +I in batch 3, instead of
+    retracting the deleted row with -U."""
+    schema = "k bigint, seq bigint, v double, deleted boolean"
+    batches = [
+        [(1, 1, 10.0, False), (2, 1, 5.0, False)],
+        [(1, 2, 10.0, True), (2, 2, 6.0, False)],
+        [(1, 3, 20.0, False)],
+    ]
+    sdf = scripted_stream(
+        spark, [spark.createDataFrame(b, schema) for b in batches], tmp_path
+    )
+    out = stateful.changelog_normalize(sdf, ["k"], order_col="seq", delete_col="deleted")
+    got = sorted(
+        (r.k, r.seq, r.v, r["__rowkind"])
+        for r in sources.run_to_memory(out, "s_changelog_delete", "append").collect()
+    )
+    assert got == [
+        (1, 1, 10.0, "+I"),
+        (1, 1, 10.0, "-D"),
+        (1, 3, 20.0, "+I"),
+        (2, 1, 5.0, "+I"),
+        (2, 1, 5.0, "-U"),
+        (2, 2, 6.0, "+U"),
+    ]
