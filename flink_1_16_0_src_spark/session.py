@@ -2792,9 +2792,10 @@ class StreamStatementSet:
         # statements stage the OPEN windows' full row sets (bounded by
         # watermark delay + window span — the generic raw-row bound),
         # not the k-bounded rank state the standalone stream_query
-        # window Top-N keeps (streaming/windows.py window_topn,
-        # TopNBuffer parity) — for very hot windows with a small k,
-        # prefer the standalone form.
+        # window Top-N keeps (streaming/windows.py window_topn: per
+        # partition key, at most k rows per open window, TopNBuffer
+        # parity) — for very hot windows with a small k, prefer the
+        # standalone form.
         overs = _over_clauses(unquoted)
         if re.search(r"\bSELECT\s+DISTINCT\b|\(\s*DISTINCT\b", unquoted,
                      re.IGNORECASE):

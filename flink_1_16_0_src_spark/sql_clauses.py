@@ -2052,9 +2052,10 @@ def lower_streaming_window_topn(sql: str, specs: list[dict]) -> DataFrame:
         ) WHERE rn <= N
 
     — onto streaming.windows.window_topn (top-k per closed window via
-    a RANK-BOUNDED per-(window, keys) buffer — at most k rows of
-    state, WindowRankProcessor.java:191 TopNBuffer parity — emitted in
-    APPEND mode when the watermark closes the window). The
+    RANK-BOUNDED state keyed on the partition keys, one at most k-row
+    buffer per open window of a key — WindowRankProcessor.java:191
+    TopNBuffer parity — emitted in APPEND mode when the watermark
+    closes the window). The
     TVF has already been rewritten by the caller; ``specs`` carries
     the raw source frame + window parameters, so the lowering
     re-windows from the raw stream. TUMBLE windows (the canonical

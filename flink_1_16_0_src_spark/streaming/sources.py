@@ -78,9 +78,8 @@ def derived_stream_partitions(
     PYTHON-stateful operator (applyInPandasWithState /
     transformWithStateInPandas): their cost is per-GROUP Python work,
     which wants core-level parallelism however small the input bytes
-    are (measured at sf0.1: the window-topn drain 5.7 s at 32
-    partitions → 16.9 s at 4 — the inverse of the state-store-commit
-    economics the byte rule targets). Keep-first dedup drains
+    are — the inverse of the state-store-commit economics the byte
+    rule targets. Keep-first dedup drains
     (stateful.keep_first_dedup) hold only JVM state, so they follow
     the byte rule."""
     if not _pending_source_bytes:

@@ -102,6 +102,8 @@ _SLOW_TESTS = {
     "test_streaming_window_topn",
     "test_streaming_window_topn_cross_batch",
     "test_streaming_window_topn_order_col_in_payload",
+    "test_window_topn_edge_inputs",
+    "test_window_topn_restart_resumes",
     "test_unbounded_full_outer",
     "test_unbounded_inner_matches_batch",
     "test_unbounded_join_ttl_bounds_state",
